@@ -7,6 +7,12 @@ object Bench {
     case i  => k.substring(0, i)
   }
 
+  /** The query-name filter of `SPARK_GRAFT_BENCH_ONLY` and DumpPlans: a
+    * query is selected when the filter names it in full or by its
+    * `qNN` short name, exactly — `q16` selects q16 only, not q160–q169. */
+  private[graft] def selects(filter: Set[String], name: String): Boolean =
+    filter.contains(name) || filter.contains(shortOf(name))
+
   /** True median: middle element on odd counts, middle-pair average on
     * even — shared by the per-query medians and the calibration so an
     * even run count (SPARK_GRAFT_BENCH_RUNS=2/4) cannot re-open the
@@ -135,12 +141,12 @@ object Bench {
     // steady-state per-query cost a cluster would see.
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     require(runs >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $runs")
-    // local iteration aid: comma-separated query-name (or qNN prefix)
-    // filter — lets a single hot query be re-timed without the full batch
+    // local iteration aid: comma-separated query-name (or qNN) filter —
+    // lets a single hot query be re-timed without the full batch
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).toSet)
     val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(s => s.contains(name) || s.exists(name.startsWith))
+      only.forall(selects(_, name))
     }
     // WARM PASS (run 0, excluded from medians): execute every selected
     // query once so one-time costs land here, not in a timed sample —

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.RollupRouting.routed
 
 /** Behavioral analytics (round 15) — ClickHouse's parametric
   * aggregate family (`windowFunnel`, `retention`, `sequenceMatch`)
@@ -121,7 +122,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelSeqSpec(dir))) {
+    routed(spark, Seq(funnelSeqSpec(dir))) {
       windowFunnelGuardedRead(Tables.events(spark, sfDir))
     }
   }
@@ -162,7 +163,8 @@ object Behavior {
     val advice = graft.plans.Advisor.advise(Seq(workload), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    graft.plans.Advisor.build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
       windowFunnelGuardedRead(Tables.events(spark, sfDir))
     }
   }
@@ -238,7 +240,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelAllSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelAllSpec(dir)))(read)
+    routed(spark, Seq(funnelAllSpec(dir)))(read)
   }
 
   /** Driver entry (q271, oracled): `windowFunnel(..., 'strict_dedup')`
@@ -350,7 +352,7 @@ object Behavior {
     StarJoins.ensureRollup(spark, dir) {
       truncatedFunnelAllPartials(Tables.events(spark, sfDir), week)
     }
-    Rollups.withRoutingSpecs(spark,
+    routed(spark,
       Seq(funnelAllSpec(dir).copy(truncatedToWindowUs = Some(week))))(read)
   }
 
@@ -397,7 +399,8 @@ object Behavior {
       s"advisor unexpectedly skipped: ${advice.skipped}")
     require(advice.splits.exists(_.contains("all-events")),
       "the opt-in must surface its state-cost warning")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    graft.plans.Advisor.build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
       windowFunnelStrictOrder(spark, sfDir)
     }
   }
@@ -769,7 +772,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelSeqSpec(dir))) {
+    routed(spark, Seq(funnelSeqSpec(dir))) {
       sequenceMatchTimed(spark, sfDir)
     }
   }
@@ -823,7 +826,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), funnelSeqSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(funnelSeqSpec(dir))) {
+    routed(spark, Seq(funnelSeqSpec(dir))) {
       windowFunnelMaxAnchorOver(Tables.events(spark, sfDir))
     }
   }
@@ -890,7 +893,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), thetaSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(thetaSpec(dir))) {
+    routed(spark, Seq(thetaSpec(dir))) {
       val states = Tables.events(spark, sfDir)
         .groupBy(col("event_type"))
         .agg(Tht.agg(col("user_id")).as("st"))
@@ -950,7 +953,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), thetaSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(thetaSpec(dir))) {
+    routed(spark, Seq(thetaSpec(dir))) {
       audienceBoundsOver(Tables.events(spark, sfDir))
     }
   }
@@ -1014,7 +1017,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), seqCountSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(seqCountSpec(dir))) {
+    routed(spark, Seq(seqCountSpec(dir))) {
       sequenceCountsOver(Tables.events(spark, sfDir))
     }
   }
@@ -1150,7 +1153,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), retentionCondSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(retentionCondSpec(dir))) {
+    routed(spark, Seq(retentionCondSpec(dir))) {
       retentionConds(Tables.events(spark, sfDir), retentionCondSet)
     }
   }
@@ -1188,7 +1191,7 @@ object Behavior {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), retentionCondSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(retentionCondSpec(dir))) {
+    routed(spark, Seq(retentionCondSpec(dir))) {
       retentionConds(retentionWindow(Tables.events(spark, sfDir)),
         retentionCondSet)
     }
@@ -1210,7 +1213,8 @@ object Behavior {
     val advice = graft.plans.Advisor.advise(Seq(workload), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) {
+    graft.plans.Advisor.build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
       retentionConds(Tables.events(spark, sfDir), retentionCondSet)
     }
   }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.RollupRouting.routed
 
 /** Statistical moments over the SUM vocabulary (round 15). ClickHouse
   * ships `varSampState` / `corrState` as dedicated mergeable states;
@@ -86,7 +87,8 @@ object Moments {
     val advice = graft.plans.Advisor.advise(Seq(momentsRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    graft.plans.Advisor.runRouted(spark, advice) { momentsRaw(spark, sfDir) }
+    graft.plans.Advisor.build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { momentsRaw(spark, sfDir) }
   }
 
   /** The A/B test cohorts — ONE definition shared by the raw read,
@@ -177,7 +179,7 @@ object Moments {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), abSpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(abSpec(dir))) {
+    routed(spark, Seq(abSpec(dir))) {
       abTestsOver(Tables.events(spark, sfDir))
     }
   }
@@ -266,7 +268,7 @@ object Moments {
       graft.plans.RollupRouting.buildPartials(
         Tables.events(spark, sfDir), mannWhitneySpec("unused"))
     }
-    Rollups.withRoutingSpecs(spark, Seq(mannWhitneySpec(dir))) {
+    routed(spark, Seq(mannWhitneySpec(dir))) {
       mannWhitneyOver(Tables.events(spark, sfDir))
     }
   }

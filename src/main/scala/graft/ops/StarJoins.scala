@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import Fns._
+import graft.plans.RollupRouting.routed
 
 /** Star-schema join capability (SURVEY §2.3 — the reference has zero
   * joins; these are added capability required by the north star).
@@ -309,9 +310,9 @@ object StarJoins {
   def chargeSegmentRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureChargeSegmentRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.chargeSegment(dir))) {
-      chargeBySegment(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir) :+
+        RollupRouting.JoinSpec.chargeSegment(dir)) {
+      chargeBySegment(spark, sfDir)
     }
   }
 
@@ -353,8 +354,8 @@ object StarJoins {
   def segmentCustomersRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureSegmentCustomersRollup(spark, sfDir)
-    Rollups.withRoutingJoinSpecs(spark,
-        Seq(RollupRouting.JoinSpec.segmentCustomers(dir))) {
+    routed(spark,
+        joinSpecs = Seq(RollupRouting.JoinSpec.segmentCustomers(dir))) {
       segmentCustomers(spark, sfDir)
     }
   }
@@ -402,17 +403,17 @@ object StarJoins {
   def segmentQtyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureSegmentQtyRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.segmentQty(dir))) {
-      segmentQtyStats(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir) :+
+        RollupRouting.JoinSpec.segmentQty(dir)) {
+      segmentQtyStats(spark, sfDir)
     }
   }
 
   /** Driver entry (q174, shares q166's oracle): REGISTRY PERSISTENCE —
     * the reference's MVs are DDL in files that outlive any process
-    * (`usdc-transfers/sql/analytics.sql:9-94`); here the in-session
-    * registry saves to one JSON document and a fresh session state
-    * loads it back. The ExprPat charge measure is the hard case: it
+    * (`usdc-transfers/sql/analytics.sql:9-94`); here the spec saves
+    * to one JSON document and the query routes over the specs read
+    * back from it. The ExprPat charge measure is the hard case: it
     * travels as its SQL rendering and is re-parsed on load, and the
     * canonicalized matcher makes the fresh tree semantically
     * identical — the unchanged raw query routes through the RELOADED
@@ -423,18 +424,9 @@ object StarJoins {
     val dir = ensureChargeSegmentRollup(spark, sfDir)
     val reg = java.nio.file.Files.createTempDirectory("graft_registry")
       .resolve("registry.json").toString
-    RollupRouting.registerJoin(RollupRouting.JoinSpec.chargeSegment(dir))
-    RollupRouting.saveRegistry(reg)
-    RollupRouting.clear()
-    RollupRouting.loadRegistry(spark, reg)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev :+ new RollupRouting.RuleImpl(spark)
-    try chargeBySegment(spark, sfDir).localCheckpoint()
-    finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
+    RollupRouting.saveRegistry(reg, Nil, Seq(RollupRouting.JoinSpec.chargeSegment(dir)))
+    val (specs, joinSpecs) = RollupRouting.readRegistry(spark, reg)
+    routed(spark, specs, joinSpecs) { chargeBySegment(spark, sfDir) }
   }
 
   /** Daily revenue by segment over the star join — the by-date
@@ -477,9 +469,9 @@ object StarJoins {
   def revenueByDaySegmentRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureRevenueSegmentDatedRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.revenueSegmentDated(dir))) {
-      revenueByDaySegment(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir) :+
+        RollupRouting.JoinSpec.revenueSegmentDated(dir)) {
+      revenueByDaySegment(spark, sfDir)
     }
   }
 
@@ -534,9 +526,9 @@ object StarJoins {
   def uniqSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureUniqSegmentRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.uniqSegmentDaily(dir))) {
-      uniqSegmentDailyRaw(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir) :+
+        RollupRouting.JoinSpec.uniqSegmentDaily(dir)) {
+      uniqSegmentDailyRaw(spark, sfDir)
     }
   }
 
@@ -562,9 +554,9 @@ object StarJoins {
   def eventsSegmentDailyRouted(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val dir = ensureEventsSegmentHourlyRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.eventsSegmentHourly(dir))) {
-      eventsSegmentDaily(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir) :+
+        RollupRouting.JoinSpec.eventsSegmentHourly(dir)) {
+      eventsSegmentDaily(spark, sfDir)
     }
   }
 
@@ -595,48 +587,33 @@ object StarJoins {
     import graft.plans.RollupRouting
     val fineDir = ensureChargeSegmentRollup(spark, sfDir)
     val coarseDir = ensureChargeSegmentCoarseRollup(spark, sfDir)
-    withJoinRouting(spark, sfDir,
-        extra = Seq(RollupRouting.JoinSpec.chargeSegmentCoarse(coarseDir),
-                    RollupRouting.JoinSpec.chargeSegment(fineDir))) {
-      chargeBySegment(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir) ++
+        Seq(RollupRouting.JoinSpec.chargeSegmentCoarse(coarseDir),
+            RollupRouting.JoinSpec.chargeSegment(fineDir))) {
+      chargeBySegment(spark, sfDir)
     }
   }
 
-  /** Run `f` with BOTH round-11 join MVs (plus any `extra` specs)
-    * registered (the multi-MV registry in action — the reference
-    * maintains six MVs side by side,
-    * `usdc-transfers/sql/analytics.sql:9-94`) and the routing rule
-    * installed; the session's optimizer state is restored afterwards so
-    * no other query in the run is affected. */
-  private def withJoinRouting[A](spark: SparkSession, sfDir: String,
-                                 extra: Seq[graft.plans.RollupRouting.JoinSpec] = Nil)
-                                (f: => A): A = {
-    import graft.plans.RollupRouting
-    val revDir = ensureRevenueSegmentRollup(spark, sfDir)
-    val volDir = ensureCustomerVolumeRollup(spark, sfDir)
-    val prev = spark.experimental.extraOptimizations
-    RollupRouting.registerJoin(RollupRouting.JoinSpec.revenueSegment(revDir))
-    RollupRouting.registerJoin(RollupRouting.JoinSpec.customerVolume(volDir))
-    extra.foreach(RollupRouting.registerJoin)
-    spark.experimental.extraOptimizations =
-      prev :+ new RollupRouting.RuleImpl(spark)
-    try f finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
-  }
+  /** BOTH round-11 join MVs, built once per session — every
+    * join-routed entry routes over them beside its own spec (the
+    * multi-MV registry in action — the reference maintains six MVs
+    * side by side, `usdc-transfers/sql/analytics.sql:9-94`). */
+  private def roundElevenJoinSpecs(spark: SparkSession, sfDir: String)
+      : Seq[graft.plans.RollupRouting.JoinSpec] = Seq(
+    graft.plans.RollupRouting.JoinSpec.revenueSegment(ensureRevenueSegmentRollup(spark, sfDir)),
+    graft.plans.RollupRouting.JoinSpec.customerVolume(ensureCustomerVolumeRollup(spark, sfDir)))
 
   /** Driver entry (q144, shares q16's oracle): transparent
-    * answering-queries-using-views end-to-end — build + register the
-    * join rollups, install the optimizer rule, and run the UNCHANGED
-    * raw 3-table query; `RollupRouting` picks the matching spec out of
-    * the registry and rewrites onto its rollup (join-free plan — shape
+    * answering-queries-using-views end-to-end — build the join
+    * rollups and route the UNCHANGED raw 3-table query over their
+    * specs; `RollupRouting` picks the matching spec and rewrites onto
+    * its rollup (join-free plan — shape
     * asserted in RollupRoutingSpec, which also proves near-miss queries
-    * stay on the live join). The result is pinned via an eager
-    * localCheckpoint while the rule is installed. */
+    * stay on the live join). The returned DataFrame carries the
+    * rewritten plan itself (PlanLintSpec asserts its rollup scan). */
   def revenueSegmentRouted(spark: SparkSession, sfDir: String): DataFrame =
-    withJoinRouting(spark, sfDir) {
-      revenueBySegment(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir)) {
+      revenueBySegment(spark, sfDir)
     }
 
   /** Driver entry (q150, shares q17's oracle): the SECOND registered
@@ -646,8 +623,8 @@ object StarJoins {
     * registered, proving the registry selects by join core rather than
     * matching a single hardcoded shape. */
   def topCustomersRouted(spark: SparkSession, sfDir: String): DataFrame =
-    withJoinRouting(spark, sfDir) {
-      topCustomers(spark, sfDir).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir)) {
+      topCustomers(spark, sfDir)
     }
 
   /** The two filter segments q152 pins (also used by its spec). */
@@ -661,8 +638,8 @@ object StarJoins {
     * dim predicate — stay live; RollupRoutingSpec). Oracle: q16's SQL
     * plus the WHERE. */
   def revenueSegmentFilteredRouted(spark: SparkSession, sfDir: String): DataFrame =
-    withJoinRouting(spark, sfDir) {
-      revenueBySegmentPlan(spark, sfDir, Some(Q152Segments)).localCheckpoint()
+    routed(spark, joinSpecs = roundElevenJoinSpecs(spark, sfDir)) {
+      revenueBySegmentPlan(spark, sfDir, Some(Q152Segments))
     }
 
   /** Spec access: the filtered raw query without routing installed. */

@@ -59,7 +59,11 @@ object Advisor {
                       * guard decisions (round 14) — why one source's
                       * demands became several specs, or why a state
                       * demand was refused. */
-                    splits: Seq[String] = Nil)
+                    splits: Seq[String] = Nil) {
+    /** The advised registrations, as [[RollupRouting.routed]] takes them. */
+    def specs: Seq[Spec] = singles.map(_.spec)
+    def joinSpecs: Seq[JoinSpec] = joins.map(_.spec)
+  }
 
   // ——— per-query demands (pre-merge) ———
   private case class SingleDemand(suffix: String, source: LogicalPlan,
@@ -1495,6 +1499,16 @@ object Advisor {
     * scratch paths. */
   def buildAndRegister(spark: SparkSession, advice: Advice,
                        memoized: Boolean = false): Advice = {
+    build(spark, advice, memoized)
+    advice.specs.foreach(register)
+    advice.joinSpecs.foreach(registerJoin)
+    advice
+  }
+
+  /** [[buildAndRegister]] without the registration: the rollups are
+    * written and the registry is left alone. */
+  def build(spark: SparkSession, advice: Advice,
+            memoized: Boolean = false): Advice = {
     import org.apache.spark.sql.graftx.Bridge
     def write(dir: String, df: => DataFrame): Unit =
       if (memoized) { graft.ops.StarJoins.ensureRollup(spark, dir)(df); () }
@@ -1514,13 +1528,11 @@ object Advisor {
             org.apache.spark.sql.functions.col(a.spec.timeCol).cast("timestamp"))
         else raw
       write(a.spec.rollupPath, buildPartials(src, a.spec))
-      register(a.spec)
     }
     advice.joins.foreach { a =>
       write(a.spec.rollupPath,
         buildJoinPartials(a.tables.map { case (n, p) => n -> Bridge.ofRows(spark, p) },
                           a.spec))
-      registerJoin(a.spec)
     }
     advice
   }
@@ -1585,15 +1597,14 @@ object Advisor {
     Adopted(advice, registryPath)
   }
 
-  private[graft] def runRouted(spark: SparkSession, advice: Advice)
-                       (f: => DataFrame): DataFrame = {
-    buildAndRegister(spark, advice, memoized = true)
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ new RollupRouting.RuleImpl(spark)
-    try f.localCheckpoint() finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
-    }
+  /** Run `f`, then unregister every rollup path it registered that
+    * was not registered before — the catalog entries below adopt into
+    * the registry, and must leave other registrations (a user's
+    * included) exactly as they found them. */
+  private def unregisteringAdded[A](f: => A): A = {
+    def paths = registered.map(_.rollupPath) ++ registeredJoins.map(_.rollupPath)
+    val before = paths.toSet
+    try f finally paths.filterNot(before).foreach(unregister)
   }
 
   /** Driver entry (q176, shares q165's oracle): the advisor reads the
@@ -1615,7 +1626,10 @@ object Advisor {
       Seq(graft.ops.Rollups.rollupDashboardRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    runRouted(spark, advice) { graft.ops.Rollups.rollupDashboardRaw(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
+      graft.ops.Rollups.rollupDashboardRaw(spark, sfDir)
+    }
   }
 
   /** Driver entry (q220, oracled — shares q219's oracle): the EXACT
@@ -1641,7 +1655,8 @@ object Advisor {
         _.isInstanceOf[RollupRouting.BitmapUniqOf]),
       s"the lattice distinct must advise the bitmap member: " +
         advice.singles.head.spec.aggs)
-    runRouted(spark, advice) { q() }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { q() }
   }
 
   /** Driver entry (q232, oracled): the GRAIN-CLAIM → BITMAP swap. A
@@ -1671,7 +1686,8 @@ object Advisor {
         _.isInstanceOf[RollupRouting.BitmapUniqOf]) &&
       advice.splits.exists(_.contains("bitmap")),
       s"the claim must swap to the bitmap member: $advice")
-    runRouted(spark, advice) { qA() }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { qA() }
   }
 
   def advisedOrdersDashboard(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1679,7 +1695,10 @@ object Advisor {
     val advice = advise(Seq(graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    runRouted(spark, advice) { graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
+      graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)
+    }
   }
 
   /** Driver entry (q178, shares q01's oracle): a DAY-grain keyed
@@ -1704,7 +1723,8 @@ object Advisor {
     require(advice.singles.size == 2 && advice.skipped.isEmpty &&
         advice.splits.nonEmpty,
       s"the keyed + keyless demands must advise per-grain specs: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.daily(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { graft.ops.Rollups.daily(spark, sfDir) }
   }
 
   /** Driver entry (q180, shares q179's oracle): a BY-DATE star
@@ -1719,7 +1739,8 @@ object Advisor {
     val advice = advise(Seq(StarJoins.revenueByDaySegment(spark, sfDir)), root)
     require(advice.joins.size == 1 && advice.skipped.isEmpty,
       s"advisor must propose the dated join MV: $advice")
-    runRouted(spark, advice) { StarJoins.revenueByDaySegment(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { StarJoins.revenueByDaySegment(spark, sfDir) }
   }
 
   /** Driver entry (q182, shares q181's oracle): a TRUNCATING time
@@ -1745,7 +1766,8 @@ object Advisor {
         advice.joins.head.spec.timeGroupings.map(_._1) ==
           Seq(TimeGrainPat("hour", "ts")),
       s"advisor must merge hour+day into one hourly time-grain MV: $advice")
-    runRouted(spark, advice) { StarJoins.eventsSegmentDaily(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { StarJoins.eventsSegmentDaily(spark, sfDir) }
   }
 
   /** Driver entry (q177, shares q166's oracle): the advisor reads
@@ -1768,7 +1790,8 @@ object Advisor {
     require(advice.joins.size == 2 && advice.skipped.isEmpty &&
         advice.splits.nonEmpty,
       s"the per-order grain must split off the segment dashboards: $advice")
-    runRouted(spark, advice) { StarJoins.chargeBySegment(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { StarJoins.chargeBySegment(spark, sfDir) }
   }
 
   /** Driver entry (q187, rows-only like the q184 sketch family): the
@@ -1786,7 +1809,10 @@ object Advisor {
       graft.ops.Rollups.daily(spark, sfDir)), root)
     require(advice.singles.size == 2 && advice.skipped.isEmpty,
       s"the sketch + keyed volume demands must advise per-grain specs: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
+      graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir)
+    }
   }
 
   /** Driver entry (q196, shares q194's oracle): a MONTHLY workload
@@ -1801,7 +1827,10 @@ object Advisor {
     require(advice.singles.size == 1 && advice.skipped.isEmpty &&
         advice.singles.head.spec.grain == "day",
       s"a monthly demand must advise a day-grain spec: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.monthlyVolumeRaw(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
+      graft.ops.Rollups.monthlyVolumeRaw(spark, sfDir)
+    }
   }
 
   /** Driver entry (q208, shares q133's oracle): the ARG-EXTREMA
@@ -1827,7 +1856,8 @@ object Advisor {
     require(aggs.exists(_.isInstanceOf[MaxPatOf]) &&
             aggs.exists(_.isInstanceOf[MinPatOf]),
       s"the advised spec must carry both struct-extremum states: $aggs")
-    runRouted(spark, advice) { graft.ops.Rollups.argExtremes(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { graft.ops.Rollups.argExtremes(spark, sfDir) }
   }
 
   /** The five dashboards [[advisedStateSuite]] pools into one spec. */
@@ -1856,14 +1886,17 @@ object Advisor {
     require(advice.singles.size == 2 && advice.skipped.isEmpty &&
         advice.splits.nonEmpty,
       s"the state suite must advise per-grain specs: $advice")
-    runRouted(spark, advice) { graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir) }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
+      graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir)
+    }
   }
 
   /** Driver entry (q202, shares q165's oracle): the ADOPTED catalog
     * end-to-end — the raw orders dashboard advises its spec, one
     * [[adopt]] call builds + registers + PERSISTS it, then the
-    * in-memory registry is deliberately DROPPED and reloaded from the
-    * adopt-written JSON before the unchanged query runs. The only
+    * unchanged query routes over the specs read back from the
+    * adopt-written JSON, not the in-memory registry. The only
     * setup between the workload and the routed read is
     * advise → adopt; a future session needs nothing but the persisted
     * catalog file (the round-trip a restart would take). */
@@ -1872,15 +1905,11 @@ object Advisor {
     val advice = advise(Seq(graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)), root)
     require(advice.singles.size == 1 && advice.skipped.isEmpty,
       s"advisor unexpectedly skipped: ${advice.skipped}")
-    val prev = spark.experimental.extraOptimizations
-    try {
-      val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true)
-      RollupRouting.clear()
-      RollupRouting.loadRegistry(spark, adopted.registryPath)
-      graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir).localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+    unregisteringAdded {
+      val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true,
+                          installRule = false)
+      val (specs, joinSpecs) = readRegistry(spark, adopted.registryPath)
+      routed(spark, specs, joinSpecs) { graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir) }
     }
   }
 
@@ -1893,8 +1922,8 @@ object Advisor {
     * keeps the 5-row set dashboard off a rollup whose rows grow with
     * the user count (the r13 one-spec merge read 150k full-key
     * array-state rows at ×100, 6.9× the live scan). One [[adopt]]
-    * call builds + registers + persists the whole catalog, the
-    * in-memory registry is dropped and reloaded from the JSON, and
+    * call builds + registers + persists the whole catalog, its specs
+    * are read back from the JSON, and
     * the unchanged q204-shape dashboard routes through its natural
     * spec. The oracled member of the state family exercising the
     * adopted multi-state catalog end-to-end. */
@@ -1943,15 +1972,11 @@ object Advisor {
       .find(_.aggs.exists(_.isInstanceOf[SetOf])).get
     require(setSpec.keyCols.keySet == Set("event_type"),
       s"the set state must land on the (day, type) grain: $setSpec")
-    val prev = spark.experimental.extraOptimizations
-    try {
-      val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true)
-      RollupRouting.clear()
-      RollupRouting.loadRegistry(spark, adopted.registryPath)
-      setDashboard(spark, sfDir).localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+    unregisteringAdded {
+      val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true,
+                          installRule = false)
+      val (specs, joinSpecs) = readRegistry(spark, adopted.registryPath)
+      routed(spark, specs, joinSpecs) { setDashboard(spark, sfDir) }
     }
   }
 
@@ -1981,7 +2006,8 @@ object Advisor {
     require(advice.skipped.isEmpty &&
         advice.singles.nonEmpty && advice.singles.forall(_.spec.grain == "all"),
       s"a purely grainless workload must advise all-grain specs: $advice")
-    runRouted(spark, advice) {
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) {
       graft.Tables.events(spark, sfDir)
         .groupBy(col("user_id"))
         .agg(graft.ops.Fns.dsum(col("value")).as("total_value"),
@@ -2018,7 +2044,8 @@ object Advisor {
         advice.singles.head.spec.sourceSuffix == "events.parquet" &&
         advice.skipped.exists(s => s.contains("budget(1)") && s.contains("orders")),
       s"the 6x-captured dashboard must win the budget over the one-off: $advice")
-    runRouted(spark, advice) { hot() }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { hot() }
   }
 
   /** Driver entry (q216): the DAY-2 advising loop (round 15) — the
@@ -2044,8 +2071,7 @@ object Advisor {
            count(lit(1)).as("n_events"))
       .orderBy("day")
     captureWorkload(Seq(volume(), orders()), log)
-    val prev = spark.experimental.extraOptimizations
-    try {
+    unregisteringAdded {
       val day1 = adviseCaptured(spark, log, root)
       require(day1.singles.size == 2, s"day 1 must advise both sources: $day1")
       buildAndRegister(spark, day1, memoized = true)
@@ -2059,11 +2085,7 @@ object Advisor {
           day3.singles.head.spec.aggs.exists(_.isInstanceOf[MinOf]),
         s"day 3 must advise exactly the new dashboard: $day3")
       buildAndRegister(spark, day3, memoized = true)
-      spark.experimental.extraOptimizations = prev :+ new RollupRouting.RuleImpl(spark)
-      extrema().localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+      routed(spark, registered, registeredJoins) { extrema() }
     }
   }
 
@@ -2091,13 +2113,14 @@ object Advisor {
         advice.singles.head.spec.aggs.exists {
           case HllUniqOf(_: ExprPat, _, 12) => true; case _ => false },
       s"the conditional-distinct demand must advise a pattern HLL state: $advice")
-    runRouted(spark, advice) { q() }
+    build(spark, advice, memoized = true)
+    routed(spark, advice.specs, advice.joinSpecs) { q() }
   }
 
   /** Driver entry (q210, shares q204's oracle): the OFFLINE advising
     * loop end-to-end (round 14) — the six-dashboard q205 workload is
     * CAPTURED to a JSON demand log, the advice is mined FROM THE FILE
-    * (no live workload DataFrames), adopted, the registry reloaded
+    * (no live workload DataFrames), adopted, the specs read back
     * from the persisted catalog, and the unchanged set dashboard
     * routes. This is the production 100 TB workflow: yesterday's
     * query log advises tomorrow's MVs in an offline pass. */
@@ -2112,15 +2135,11 @@ object Advisor {
     require(advice.singles.flatMap(_.spec.aggs)
               .exists(_.isInstanceOf[SetOf]),
       s"the captured set demand must survive the file round-trip: $advice")
-    val prev = spark.experimental.extraOptimizations
-    try {
-      val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true)
-      RollupRouting.clear()
-      RollupRouting.loadRegistry(spark, adopted.registryPath)
-      setDashboard(spark, sfDir).localCheckpoint()
-    } finally {
-      spark.experimental.extraOptimizations = prev
-      RollupRouting.clear()
+    unregisteringAdded {
+      val adopted = adopt(spark, advice, s"$root/registry.json", memoized = true,
+                          installRule = false)
+      val (specs, joinSpecs) = readRegistry(spark, adopted.registryPath)
+      routed(spark, specs, joinSpecs) { setDashboard(spark, sfDir) }
     }
   }
 }

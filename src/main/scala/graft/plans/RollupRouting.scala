@@ -1574,6 +1574,35 @@ object RollupRouting {
   def registered: List[Spec] = specs
   def registeredJoins: List[JoinSpec] = joinSpecs
 
+  /** Route one query over an explicit spec list, with no global state:
+    * a [[RuleImpl]] over `specs`/`joinSpecs` runs to a fixed point over
+    * `q`'s optimized plan, as the optimizer's extra batch runs an
+    * installed one, and the rewritten plan comes back as a lazy
+    * DataFrame. The registry, `extraOptimizations` and every other
+    * query stay as they were, and `explain` shows the plan that runs.
+    *
+    * The result is a SNAPSHOT, as `spark.read.parquet` is: each
+    * rollup's file listing and coverage watermark are read when
+    * `routed` is called. A later append or sidecar stamp is not seen,
+    * and a compaction or expiry that deletes listed files fails the
+    * scan — route again to read the new state. */
+  def routed(spark: SparkSession, specs: Seq[Spec] = Nil,
+             joinSpecs: Seq[JoinSpec] = Nil)
+            (q: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val (singles, joins) = (specs.toList, joinSpecs.toList)
+    val rule = new RuleImpl(spark, singles, joins)
+    var plan = q.queryExecution.optimizedPlan
+    var i = 0
+    var done = false
+    while (!done && i < spark.sessionState.conf.optimizerMaxIterations) {
+      val next = rule(plan)
+      done = next.fastEquals(plan)
+      plan = next
+      i += 1
+    }
+    org.apache.spark.sql.graftx.Bridge.ofRows(spark, plan)
+  }
+
   // ——— registry persistence (round 12) ———
   //
   // The reference's MVs are DDL in files that outlive any process
@@ -1639,18 +1668,20 @@ object RollupRouting {
     }
   }
 
-  /** Persist BOTH registries as one JSON document. */
-  def saveRegistry(path: String): Unit = {
+  /** Persist BOTH registries (or the given spec lists) as one JSON
+    * document. */
+  def saveRegistry(path: String, singles: Seq[Spec] = registered,
+                   joins: Seq[JoinSpec] = registeredJoins): Unit = {
     import org.json4s.JsonDSL._
     import org.json4s.jackson.JsonMethods
     val doc =
-      ("singles" -> registered.map { s =>
+      ("singles" -> singles.toList.map { s =>
         ("sourceSuffix" -> s.sourceSuffix) ~ ("rollupPath" -> s.rollupPath) ~
         ("grain" -> s.grain) ~ ("timeCol" -> s.timeCol) ~
         ("keyCols" -> s.keyCols) ~ ("aggs" -> s.aggs.map(aggJson)) ~
         ("truncatedToWindowUs" -> s.truncatedToWindowUs)
       }) ~
-      ("joins" -> registeredJoins.map { j =>
+      ("joins" -> joins.toList.map { j =>
         ("rollupPath" -> j.rollupPath) ~ ("tables" -> j.tables.toList.sorted) ~
         ("joinKeys" -> j.joinKeys.toList.sorted.map(p => List(p._1, p._2))) ~
         ("groupings" -> j.groupings) ~ ("aggs" -> j.aggs.map(aggJson)) ~
@@ -1743,6 +1774,16 @@ object RollupRouting {
   /** Load a [[saveRegistry]] document and register everything in it
     * (appending to whatever is already registered, in saved order). */
   def loadRegistry(spark: SparkSession, path: String): Unit = {
+    val (singles, joins) = readRegistry(spark, path)
+    synchronized {
+      singles.reverse.foreach(register)
+      joins.reverse.foreach(registerJoin)
+    }
+  }
+
+  /** The specs a [[saveRegistry]] document holds, in saved order,
+    * without registering them (what [[routed]] takes). */
+  def readRegistry(spark: SparkSession, path: String): (List[Spec], List[JoinSpec]) = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmts: Formats = DefaultFormats
@@ -1771,10 +1812,7 @@ object RollupRouting {
             (t \ "rollupCol").extract[String]
         })
     }
-    synchronized {
-      singles.reverse.foreach(register)
-      joins.reverse.foreach(registerJoin)
-    }
+    (singles, joins)
   }
 
   /** Per-(path, directory-mtime) cache of each rollup's ANALYZED scan
@@ -1803,7 +1841,14 @@ object RollupRouting {
     * path per rollup state, not one per optimizer visit. */
   @volatile private[graft] var planListings: Long = 0L
 
-  class RuleImpl(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
+  /** The routing rule over the specs it matches against. By default
+    * those are re-read from the registry on every pass, so the one
+    * instance [[GraftExtensions]] or [[Advisor.adopt]] installs serves
+    * registrations made after it; [[routed]] passes a fixed list. */
+  class RuleImpl(spark: SparkSession,
+                 specs: => List[Spec] = RollupRouting.registered,
+                 joinSpecs: => List[JoinSpec] = RollupRouting.registeredJoins)
+      extends Rule[LogicalPlan] with PredicateHelper {
 
     /** The exact shape every decimal partial is built from
       * ([[graft.ops.Fns.dsumPartial]]): `cast(<source expr> as

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.LongType
 import graft.Tables
 import graft.ops.Fns._
+import graft.plans.RollupRouting.routed
 
 /** Structured-Streaming variants of the ingest/rollup pipeline
   * (SURVEY §2.8 T1–T6).
@@ -551,7 +552,7 @@ object Live {
       fileStream(spark, sfDir, "lineitem.parquet", Some(1)), "lineitem",
       Map("orders" -> o, "customer" -> c), spec)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
-    graft.ops.Rollups.withRoutingJoinSpecs(spark, Seq(spec)) {
+    routed(spark, joinSpecs = Seq(spec)) {
       graft.ops.StarJoins.revenueBySegment(spark, sfDir)
     }
   }
@@ -577,7 +578,7 @@ object Live {
       fileStream(spark, sfDir, "events.parquet", Some(1)), "events",
       Map("customer" -> c), spec, grainUs = 3600000000L)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
-    graft.ops.Rollups.withRoutingJoinSpecs(spark, Seq(spec)) {
+    routed(spark, joinSpecs = Seq(spec)) {
       graft.ops.StarJoins.eventsSegmentDaily(spark, sfDir)
     }
   }
@@ -590,9 +591,12 @@ object Live {
     * binary block; the coverage watermark advances along the `ts_day`
     * rollup column), COMPACTED per (day, segment) via sketch union,
     * and the UNCHANGED sketch-over-join dashboard answered as states
-    * ∪ live-tail re-join across the day watermark — bit-equal to the
-    * single-pass answer (sketch union is exactly mergeable across
-    * both the batch boundary and the coverage boundary). */
+    * ∪ live-tail re-join across the day watermark. A merged state
+    * equals the single-pass estimate only while each group's sketch
+    * is still exact (coupon mode: up to 384 distinct values at lgK
+    * 12); past that the union, which has no HIP accumulator, agrees
+    * within the sketch's RSE. RollupRoutingSpec covers the exact
+    * regime (the test fixture has ≤ 15 users per day). */
   def streamingUniqSegmentHybrid(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.plans.RollupRouting
     val rollupDir = java.nio.file.Files.createTempDirectory("graft_uniqseg_hy")
@@ -603,7 +607,7 @@ object Live {
       fileStream(spark, sfDir, "events.parquet", Some(1)), "events",
       Map("customer" -> c), spec)
     graft.ops.Rollups.compactJoinRollup(spark, spec)
-    graft.ops.Rollups.withRoutingJoinSpecs(spark, Seq(spec)) {
+    routed(spark, joinSpecs = Seq(spec)) {
       graft.ops.StarJoins.uniqSegmentDailyRaw(spark, sfDir)
     }
   }
@@ -674,7 +678,7 @@ object Live {
     // of the max event time the drain saw)
     val wmUs = java.time.Instant.parse("2024-01-27T00:00:00Z").toEpochMilli * 1000L
     graft.plans.RollupRouting.stampCoverage(rollupDir, wmUs)
-    graft.ops.Rollups.withRoutingSpecs(spark,
+    routed(spark,
         Seq(graft.plans.RollupRouting.Spec("events.parquet", rollupDir))) {
       graft.Tables.events(spark, sfDir)
         .groupBy(to_date(col("ts")).as("day"), col("user_id"))
@@ -704,7 +708,7 @@ object Live {
       fileStream(spark, sfDir, "orders.parquet", Some(1))
         .filter(col("o_orderdate").cast("timestamp") < seenUpTo),
       spec)
-    graft.ops.Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    routed(spark, Seq(spec)) {
       graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)
     }
   }
@@ -728,7 +732,7 @@ object Live {
         .filter(col("o_orderdate").cast("timestamp") < seenUpTo),
       spec)
     graft.ops.Rollups.compactRollup(spark, spec)
-    graft.ops.Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    routed(spark, Seq(spec)) {
       graft.ops.Rollups.ordersDailySalesRaw(spark, sfDir)
     }
   }
@@ -741,16 +745,19 @@ object Live {
     * the last complete day), compacted to ONE state per day
     * (`hll_union_agg` is the member's merge), and the UNCHANGED raw
     * sketch dashboard answered as states ∪ live-tail sketch across
-    * the watermark. Sketch union is exactly mergeable, so the
-    * streaming build reproduces the single-pass estimates bit-for-bit
-    * (RollupRoutingSpec pins it). */
+    * the watermark. The streaming build reproduces the single-pass
+    * estimates bit-for-bit only while each day's sketch is still
+    * exact (coupon mode: up to 384 distinct users at lgK 12, which
+    * the fixtures through sf0.01 stay under and RollupRoutingSpec
+    * pins); past that the merged state has no HIP accumulator and its
+    * estimate agrees with the single pass within the sketch's RSE. */
   def streamingUniqSketchHybrid(spark: SparkSession, sfDir: String): DataFrame = {
     val rollupDir = java.nio.file.Files.createTempDirectory("graft_hll_mv")
       .resolve("uniq_rollup").toString
     val spec = graft.ops.Rollups.uniqSketchSpec(rollupDir)
     maintainRollup(eventStream(spark, sfDir), spec)
     graft.ops.Rollups.compactRollup(spark, spec)
-    graft.ops.Rollups.withRoutingSpecs(spark, Seq(spec)) {
+    routed(spark, Seq(spec)) {
       graft.ops.Rollups.dailyUniqSketchRaw(spark, sfDir)
     }
   }

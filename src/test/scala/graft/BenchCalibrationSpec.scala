@@ -155,4 +155,13 @@ class BenchCalibrationSpec extends AnyFunSuite {
     assert(pick2.contains("q09_c"),
       s"with q68 failed the next-largest band must be picked: $pick2")
   }
+
+  test("SPARK_GRAFT_BENCH_ONLY matches exactly: q16 selects only " +
+       "q16_revenue_segment, never the q160–q169 streams") {
+    val picked = SparkEntry.queries.keys.filter(Bench.selects(Set("q16"), _)).toSet
+    assert(picked == Set("q16_revenue_segment"), s"q16 selected $picked")
+    assert(SparkEntry.queries.keys.filter(
+        Bench.selects(Set("q164_stream_hybrid_daily"), _)).toSet ==
+      Set("q164_stream_hybrid_daily"), "a full name selects itself")
+  }
 }

@@ -161,6 +161,32 @@ class PlanLintSpec extends AnyFunSuite {
     }
   }
 
+  test("routed entries return the plan that runs: q144 and q184 scan their rollups") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    def scanned(p: SparkPlan): Seq[String] = {
+      val self = p match {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        case _ => Nil
+      }
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case _ => p.children
+      }
+      self ++ kids.flatMap(scanned) ++ p.subqueries.flatMap(scanned)
+    }
+    val q144 = scanned(SparkEntry.queries("q144_revenue_segment_routed")(spark, sf)
+      .queryExecution.executedPlan)
+    assert(q144.exists(_.endsWith(ops.StarJoins.revenueSegmentRollupDir(sf))) &&
+             !q144.exists(_.contains("lineitem")),
+      s"q144 must scan the revenue-segment rollup and no lineitem file: $q144")
+    val q184 = scanned(SparkEntry.queries("q184_uniq_sketch_routed")(spark, sf)
+      .queryExecution.executedPlan)
+    assert(q184.exists(_.endsWith(ops.Rollups.uniqSketchRollupDir(sf))) &&
+             !q184.exists(_.contains("events.parquet")),
+      s"q184 must scan the sketch rollup and no events file: $q184")
+  }
+
   test("no query plans a CartesianProduct") {
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(skip)

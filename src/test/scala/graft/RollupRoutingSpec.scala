@@ -23,6 +23,33 @@ class RollupRoutingSpec extends AnyFunSuite {
     }
   }
 
+  test("routed entries leave the registry and extraOptimizations as they found them") {
+    // a user's own registrations and installed rule, made before any
+    // entry runs; no entry may drop, add or reorder either
+    val userSpec = RollupRouting.Spec("user_table.parquet", "/nonexistent/user_rollup")
+    val userJoin = RollupRouting.JoinSpec.chargeSegment("/nonexistent/user_join_rollup")
+    val rule = new RollupRouting.RuleImpl(spark)
+    RollupRouting.register(userSpec)
+    RollupRouting.registerJoin(userJoin)
+    spark.experimental.extraOptimizations = Seq(rule)
+    try {
+      for (q <- Seq("q144_revenue_segment_routed", "q176_advised_orders",
+                    "q184_uniq_sketch_routed", "q174_registry_persisted",
+                    "q202_adopted_orders", "q216_advised_delta")) {
+        assert(SparkEntry.queries(q)(spark, sf).collect().nonEmpty, q)
+        assert(RollupRouting.registered == List(userSpec) &&
+                 RollupRouting.registeredJoins == List(userJoin),
+          s"$q changed the registry: ${RollupRouting.registered} " +
+            s"${RollupRouting.registeredJoins}")
+        assert(spark.experimental.extraOptimizations == Seq(rule),
+          s"$q changed extraOptimizations")
+      }
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+      RollupRouting.clear()
+    }
+  }
+
   test("daily query is routed to the rollup and matches the raw answer") {
     val plain = graft.ops.Rollups.daily(spark, sf).collect().toSeq
     withRouting {
@@ -151,12 +178,11 @@ class RollupRoutingSpec extends AnyFunSuite {
     import graft.ops.StarJoins
     val plainTop = StarJoins.topCustomers(spark, sf).collect().toSeq
     val plainRev = StarJoins.revenueBySegment(spark, sf).collect().toSeq
-    // the q150/q144 drivers register BOTH specs and run the unchanged
-    // queries (their results are checkpoint-pinned; values must match)
+    // the q150/q144 drivers route the unchanged queries over BOTH
+    // specs; values must match
     assert(StarJoins.topCustomersRouted(spark, sf).collect().toSeq == plainTop)
     assert(StarJoins.revenueSegmentRouted(spark, sf).collect().toSeq == plainRev)
-    // plan assertions: register both specs manually (the drivers pin
-    // results through a localCheckpoint, which hides the plan)
+    // plan assertions through the registry and the installed rule
     StarJoins.revenueSegmentViaRollup(spark, sf).collect() // ensure rollup exists
     RollupRouting.registerJoin(
       RollupRouting.JoinSpec.revenueSegment(StarJoins.revenueSegmentRollupDir(sf)))
@@ -198,7 +224,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     import graft.ops.StarJoins
     val segs = StarJoins.Q152Segments
     val plain = StarJoins.revenueBySegmentFiltered(spark, sf, segs).collect().toSeq
-    // driver path first (checkpoint-pinned values)
+    // driver path first
     assert(StarJoins.revenueSegmentFilteredRouted(spark, sf).collect().toSeq == plain)
     // plan assertions under manual registration
     StarJoins.revenueSegmentViaRollup(spark, sf).collect() // ensure rollup exists
@@ -271,7 +297,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     * boundaries that can split a day group stay on the raw scan. */
   test("day-windowed query routes with the filter; mid-day cut stays live") {
     val plain = graft.ops.Rollups.dailyVolumeWindowRaw(spark, sf).collect().toSeq
-    // the q151 driver pins its result via localCheckpoint; values first
+    // the q151 driver's values first
     assert(graft.ops.Rollups.dailyVolumeWindowRouted(spark, sf).collect().toSeq == plain)
     // plan assertions under a manual registration of the same rollup
     RollupRouting.register(RollupRouting.Spec("events.parquet",
@@ -648,7 +674,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     import graft.ops.Rollups
     val dayRaw = Rollups.dailyVolumeWindowRaw(spark, sf).collect().toSeq
     val hourRaw = Rollups.hourlyVolumeWindowRaw(spark, sf).collect().toSeq
-    // driver entries: routed results equal raw (values first — drivers checkpoint)
+    // driver entries: routed results equal raw (values first)
     assert(Rollups.dailyWindowHourlyRouted(spark, sf).collect().toSeq == dayRaw)
     assert(Rollups.hourlyVolumeWindowRouted(spark, sf).collect().toSeq == hourRaw)
     // manual registrations against temp-dir rollups for plan assertions
@@ -939,7 +965,7 @@ class RollupRoutingSpec extends AnyFunSuite {
     import graft.ops.Rollups
     val plain = Rollups.ordersDailySalesRaw(spark, sf).collect().toSeq
     assert(plain.nonEmpty)
-    // driver path (checkpoint-pinned values)
+    // driver path
     assert(Rollups.ordersDailySalesRouted(spark, sf).collect().toSeq == plain)
     // the rollup-grain (day × custkey) query, live reference first
     val byCustQ = () => Tables.orders(spark, sf)
@@ -1212,7 +1238,7 @@ class RollupRoutingSpec extends AnyFunSuite {
   test("dsum-shaped avg routes bit-exactly; grouped + user grain too") {
     val plain = graft.ops.Rollups.dailyAvgRaw(spark, sf).collect().toSeq
     assert(plain.nonEmpty)
-    // driver path (checkpoint-pinned values)
+    // driver path
     assert(graft.ops.Rollups.dailyAvgRouted(spark, sf).collect().toSeq == plain)
     // the (day, user) grain — exactly the rollup's groups, so the
     // "division of one partial" degenerate case must also be exact
@@ -1898,8 +1924,6 @@ class RollupRoutingSpec extends AnyFunSuite {
     import graft.plans.RollupRouting.JoinSpec
     val plain = StarJoins.segmentQtyStats(spark, sf).collect().toSeq
     val routed = StarJoins.segmentQtyRouted(spark, sf)
-    // the driver entry localCheckpoints under the rule; re-run the
-    // plan shape assertion directly
     val dir = StarJoins.segmentQtyRollupDir(sf)
     RollupRouting.registerJoin(JoinSpec.segmentQty(dir))
     spark.experimental.extraOptimizations = Seq(new RollupRouting.RuleImpl(spark))
@@ -2505,11 +2529,14 @@ class RollupRoutingSpec extends AnyFunSuite {
     assert(routedJoin.collect().toSeq == joinRaw,
       "join-path sketch MV must equal the live join answer")
     // sketch × join × streaming (q197): maintain → compact → hybrid
-    // re-join must reproduce the single-pass answer bit-for-bit
+    // re-join reproduces the single-pass answer bit-for-bit while every
+    // sketch is still exact (coupon mode; ≤ 15 users per day here)
     assert(Live.streamingUniqSegmentHybrid(spark, sf).collect().toSeq == joinRaw,
       "stream-maintained join sketch MV hybrid must equal the single-pass answer")
-    // the streaming lifecycle: maintain → compact → hybrid-read must
-    // reproduce the single-pass estimates bit-for-bit (q190's shape)
+    // the streaming lifecycle (q190's shape): maintain → compact →
+    // hybrid-read reproduces the single-pass estimates bit-for-bit in
+    // this exact regime; a merged state past coupon mode has no HIP
+    // accumulator and agrees only within the sketch's RSE
     assert(Live.streamingUniqSketchHybrid(spark, sf).collect().toSeq == raw,
       "stream-maintained + compacted sketch MV must equal the single-pass answer")
     // q193: each 7-day window's union-of-states estimate is bit-equal
@@ -2943,8 +2970,7 @@ class RollupRoutingSpec extends AnyFunSuite {
       assert(flat.collect().toSeq == flatTruth,
         "routed estimate must be bit-equal to the single-pass sketch")
       // lattice: ROLLUP over approx_count_distinct routes end-to-end
-      // (inline under the installed rule — the driver entry
-      // localCheckpoints, so its plan is an RDD scan by design)
+      // (inline under the installed rule)
       val routed = Tables.events(spark, sf)
         .rollup(to_date($"ts").as("day"), $"event_type")
         .agg(approx_count_distinct($"user_id").as("uniq_users_approx"),
